@@ -62,20 +62,6 @@ def _points_on_edges(px, py, ring, tol=1e-9):
     return on.any(axis=1)
 
 
-def point_segments_distance(
-    px: float, py: float, segs_a: np.ndarray, segs_b: np.ndarray
-) -> np.ndarray:
-    """Distance from one point to each segment (a[i] -> b[i])."""
-    a = np.asarray(segs_a, np.float64)
-    b = np.asarray(segs_b, np.float64)
-    d = b - a
-    w = np.array([px, py])[None, :] - a
-    seg_len2 = (d * d).sum(axis=1)
-    t = np.clip(np.divide((w * d).sum(axis=1), np.where(seg_len2 == 0, 1, seg_len2)), 0, 1)
-    proj = a + t[:, None] * d
-    return np.hypot(px - proj[:, 0], py - proj[:, 1])
-
-
 def points_to_polyline_distance(
     px: np.ndarray, py: np.ndarray, line: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -121,14 +107,6 @@ def interpolate_along(line: np.ndarray, distances: np.ndarray) -> np.ndarray:
     denom = np.where(seg[idx] == 0, 1, seg[idx])
     t = (dd - cum[idx]) / denom
     return line[idx] + t[:, None] * (line[idx + 1] - line[idx])
-
-
-def centroid_of_coords(coords: np.ndarray) -> tuple[float, float]:
-    """Vertex-mean centroid (adequate for the reference's certainty-mask
-    latitude test, vector.py:466-471, where exact area-centroid is not
-    load-bearing)."""
-    c = np.asarray(coords, np.float64)
-    return float(c[:, 0].mean()), float(c[:, 1].mean())
 
 
 def disc_polygon(cx: float, cy: float, radius: float, n: int = 64) -> np.ndarray:

@@ -6,9 +6,13 @@ clip to the unbuffered study cell (vector.py:1604,1658) — the halo-and-
 clip discipline that makes per-tile vectorization seamless across tile
 boundaries (raster.py:547,684-689).
 
-Spark plan: one `mapInPandas` over composite rows; each input row emits
-0..n shoreline rows (UDTF shape). Output carries the quadtree `cell_id`
-(tile assignment) so downstream joins/aggregations partition on it.
+Spark plan: `shorelines` is one `mapInPandas` over composite rows; each
+input row emits 0..n shoreline rows (UDTF shape). The tiles->shorelines
+query (plans.pipeline.shoreline_pipeline) instead runs
+`_shoreline_rows_for_group`, which composites and vectorizes one
+(tile, year) group in a single grouped map. Output carries the quadtree
+`cell_id` (tile assignment) so downstream joins/aggregations partition
+on it.
 """
 
 from __future__ import annotations
@@ -19,11 +23,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..codecs import image as img_codec
 from ..codecs import tiff
 from ..functions import marching
 from ..geometry import algorithms as ga
 from ..geometry import wkb
 from ..index import cells
+from . import composite as comp_op
 
 SHORELINE_SCHEMA = (
     "cell_id long, tile_x int, tile_y int, year int, "
@@ -33,9 +39,10 @@ SHORELINE_SCHEMA = (
 # cell resolution for tile assignment: cell edge 4096 m >= tile core 3840 m
 DEFAULT_CELL_RES = 11
 
-# cloned-session memo for shorelines_colocated: one pinned session per
-# (SparkContext, maxPartitionBytes value) for the application lifetime
-_PINNED_SESSIONS: dict = {}
+SHORELINE_COLUMNS = [
+    "cell_id", "tile_x", "tile_y", "year",
+    "geometry", "n_vertices", "length_m", "certainty",
+]
 
 
 def _rc_to_world(pts_rc: np.ndarray, transform: list[float]) -> np.ndarray:
@@ -97,6 +104,32 @@ def extract_shorelines_tile(
     return out
 
 
+def _piece_rows(pieces: list[dict], cell_res: int, **key) -> list[dict]:
+    """Shoreline pieces of one tile -> output rows: `key` columns plus
+    the piece fields, with `cell_id` the res-`cell_res` cell of each
+    piece's mean vertex (tile assignment)."""
+    cell_ids = cells.xy_to_cell(
+        np.array([p.pop("_rep_x") for p in pieces]),
+        np.array([p.pop("_rep_y") for p in pieces]),
+        cell_res,
+    )
+    return [
+        {"cell_id": int(c), **key, **p} for c, p in zip(cell_ids, pieces)
+    ]
+
+
+def _decode_composite(r) -> tuple:
+    """One composite row -> (mndwi, stdev, count, transform)."""
+    mndwi = tiff.decode_f32(bytes(r.mndwi_bytes))
+    stdev = tiff.decode_f32(bytes(r.stdev_bytes)) if r.stdev_bytes else None
+    count = tiff.decode_f32(bytes(r.count_bytes)) if r.count_bytes else None
+    return mndwi, stdev, count, json.loads(r.transform)
+
+
+def _tile_key(r) -> dict:
+    return {"tile_x": int(r.tile_x), "tile_y": int(r.tile_y), "year": int(r.year)}
+
+
 def shorelines(
     composites: DataFrame,
     level: float = 0.0,
@@ -109,37 +142,13 @@ def shorelines(
         for pdf in batches:
             rows = []
             for r in pdf.itertuples():
-                mndwi = tiff.decode_f32(bytes(r.mndwi_bytes))
-                stdev = tiff.decode_f32(bytes(r.stdev_bytes)) if r.stdev_bytes else None
-                count = tiff.decode_f32(bytes(r.count_bytes)) if r.count_bytes else None
-                transform = json.loads(r.transform)
-                for piece in extract_shorelines_tile(
+                mndwi, stdev, count, transform = _decode_composite(r)
+                pieces = extract_shorelines_tile(
                     mndwi, stdev, count, transform, int(r.halo_px),
                     level=level, min_vertices=min_vertices,
-                ):
-                    cell = int(
-                        cells.xy_to_cell(
-                            np.array([piece.pop("_rep_x")]),
-                            np.array([piece.pop("_rep_y")]),
-                            cell_res,
-                        )[0]
-                    )
-                    rows.append(
-                        {
-                            "cell_id": cell,
-                            "tile_x": int(r.tile_x),
-                            "tile_y": int(r.tile_y),
-                            "year": int(r.year),
-                            **piece,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "cell_id", "tile_x", "tile_y", "year",
-                    "geometry", "n_vertices", "length_m", "certainty",
-                ],
-            )
+                )
+                rows += _piece_rows(pieces, cell_res, **_tile_key(r))
+            yield pd.DataFrame(rows, columns=SHORELINE_COLUMNS)
 
     return composites.mapInPandas(extract, SHORELINE_SCHEMA)
 
@@ -161,38 +170,18 @@ def multi_level_shorelines(
         for pdf in batches:
             rows = []
             for r in pdf.itertuples():
-                mndwi = tiff.decode_f32(bytes(r.mndwi_bytes))
-                stdev = tiff.decode_f32(bytes(r.stdev_bytes)) if r.stdev_bytes else None
-                count = tiff.decode_f32(bytes(r.count_bytes)) if r.count_bytes else None
-                transform = json.loads(r.transform)
+                mndwi, stdev, count, transform = _decode_composite(r)
                 for level in levels:
-                    for piece in extract_shorelines_tile(
+                    pieces = extract_shorelines_tile(
                         mndwi, stdev, count, transform, int(r.halo_px),
                         level=float(level), min_vertices=min_vertices,
-                    ):
-                        cell = int(
-                            cells.xy_to_cell(
-                                np.array([piece.pop("_rep_x")]),
-                                np.array([piece.pop("_rep_y")]),
-                                cell_res,
-                            )[0]
-                        )
-                        rows.append(
-                            {
-                                "cell_id": cell,
-                                "tile_x": int(r.tile_x),
-                                "tile_y": int(r.tile_y),
-                                "year": int(r.year),
-                                "level": float(level),
-                                **piece,
-                            }
-                        )
+                    )
+                    rows += _piece_rows(
+                        pieces, cell_res, **_tile_key(r), level=float(level)
+                    )
             yield pd.DataFrame(
                 rows,
-                columns=[
-                    "cell_id", "tile_x", "tile_y", "year", "level",
-                    "geometry", "n_vertices", "length_m", "certainty",
-                ],
+                columns=SHORELINE_COLUMNS[:4] + ["level"] + SHORELINE_COLUMNS[4:],
             )
 
     schema = SHORELINE_SCHEMA.replace(
@@ -201,181 +190,21 @@ def multi_level_shorelines(
     return composites.mapInPandas(extract, schema)
 
 
-def shorelines_fused(
-    tiles: DataFrame,
-    apply_tide_filter: bool = True,
-    level: float = 0.0,
-    min_vertices: int = 10,
-    cell_res: int = DEFAULT_CELL_RES,
-) -> DataFrame:
-    """Single-stage tiles -> shoreline rows: composite stats + marching
-    squares inside ONE grouped map, skipping the intermediate TIFF
-    encode/decode round trip (3 encodes + 3 decodes per tile-year) and
-    one narrow Python stage. Math identical to
-    annual_composites() |> shorelines() — pinned by
-    tests/test_pipeline.py::test_fused_equals_staged. Use the staged
-    pair when the composite table itself is a wanted output (masking,
-    gapfill, incremental maintenance); use this for the straight
-    tiles->vectors query."""
-    from ..operators import composite as comp_op
-
-    meta = comp_op.with_caption(tiles)
-    if apply_tide_filter:
-        meta = comp_op.tide_filtered(meta)
-
-    def fused(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one shared kernel body with the colocated path — a fix there
-        # (certainty sampling, cell assignment) reaches both plans
-        return _shoreline_rows_for_group(pdf, level, min_vertices, cell_res)
-
-    return (
-        meta.select(
-            "tile_x", "tile_y", "year", "bytes", "fmt", "transform", "halo_px"
-        )
-        .groupBy("tile_x", "tile_y", "year")
-        .applyInPandas(fused, SHORELINE_SCHEMA)
-    )
-
-
-def shorelines_colocated(
-    spark,
-    table_path: str,
-    years=None,
-    apply_tide_filter: bool = True,
-    level: float = 0.0,
-    min_vertices: int = 10,
-    cell_res: int = DEFAULT_CELL_RES,
-) -> DataFrame:
-    """ZERO-shuffle tiles -> shorelines for snapshot tables written by
-    sources.tiles.write_tiles.
-
-    write_tiles clusters rows so each (cell_id, year) partition
-    directory holds exactly one file; every (tile, year) group is
-    therefore complete within one file. This reader pins
-    `spark.sql.files.maxPartitionBytes` above the table's largest file
-    (from the manifest) so Spark never splits a file across tasks, then
-    groups WITHIN partitions in one mapInPandas — the image bytes are
-    never shuffled. The tide-cutoff join stays a broadcast (map-side),
-    so the whole plan is: scan -> broadcast join -> grouped kernel.
-
-    At 10^12 images this is the difference between shuffling the whole
-    corpus once per run and shuffling nothing: the table layout IS the
-    partitioning (the Spark analog of the reference running one CLI per
-    tile directory, raster.py:530-536).
-
-    Measured trade-off (local[32], 51k tiles): the staged path wins
-    locally (3.9s vs 7.2s) because a local shuffle is page-cached while
-    this path pays the small-files tax (~600 files x ~3ms open/footer =
-    the whole difference; a plain 32-file scan of the same bytes is 7x
-    faster than the 600-file scan). On a cluster the economics invert:
-    files are ~512 MB (no tax) and the avoided shuffle is network-bound
-    over the full corpus. Use staged locally / for small tables,
-    colocated for production-layout tables.
-    """
-    from ..operators import composite as comp_op
-    from ..sources.table import SnapshotTable
-    from ..sources.tiles import read_tiles
-
-    from pyspark.sql import SparkSession as _SS
-
-    table = SnapshotTable(spark, table_path)
-    meta = table._metadata()
-    max_bytes = max((f.get("bytes", 0) for f in meta["files"]), default=0)
-    conf_key = "spark.sql.files.maxPartitionBytes"
-    # Pin the conf on a CLONED session (same SparkContext, copied
-    # session state) and build the plan against the clone: file-split
-    # planning reads the conf lazily at ACTION time, so setting it on
-    # the caller's session and restoring it before returning would mean
-    # the pin is gone by the time the returned DataFrame executes —
-    # large files would be split across tasks and groups fragmented.
-    # The clone's conf lives as long as the returned plan; the caller's
-    # session is never touched. Clones are MEMOIZED per (context,
-    # pinned value): a loop over many tables reuses one clone per
-    # distinct file size instead of leaking a session (and its JVM
-    # state/listeners) per call. The pinned value is read at plan-BUILD
-    # time — rewrite the table and rebuild the plan to pick up new
-    # sizes.
-    pin_val = str(max(int(max_bytes) + (1 << 20), 8 << 20))
-    # key on applicationId, not id(sparkContext): a stopped context's
-    # object id can be reused by a NEW context after GC, which would
-    # hand back a clone of the dead session. App ids are unique per
-    # context; entries from previous (dead) apps are evicted here so
-    # the memo never grows beyond one app's distinct file sizes.
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _PINNED_SESSIONS if k[0] != app_id]:
-        del _PINNED_SESSIONS[k]
-    cache_key = (app_id, pin_val)
-    pinned = _PINNED_SESSIONS.get(cache_key)
-    if pinned is None:
-        pinned = _SS(spark.sparkContext, spark._jsparkSession.cloneSession())
-        pinned.conf.set(conf_key, pin_val)
-        _PINNED_SESSIONS[cache_key] = pinned
-
-    tiles = read_tiles(pinned, table_path, years=years)
-    meta_df = comp_op.with_caption(tiles)
-    if apply_tide_filter:
-        meta_df = comp_op.tide_filtered(meta_df)
-    src = meta_df.select(
-        "tile_x", "tile_y", "year", "bytes", "fmt", "transform", "halo_px"
-    )
-
-    def kernel(batches):
-        import pandas as _pd
-
-        buf = []
-        for pdf in batches:
-            if len(pdf):
-                buf.append(pdf)
-        if not buf:
-            return
-        allp = _pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-        for (tx, ty, yr), grp in allp.groupby(["tile_x", "tile_y", "year"]):
-            out = _shoreline_rows_for_group(
-                grp, level, min_vertices, cell_res
-            )
-            if len(out):
-                yield out
-
-    return src.mapInPandas(kernel, SHORELINE_SCHEMA)
-
-
-def _shoreline_rows_for_group(
-    grp: pd.DataFrame, level: float, min_vertices: int, cell_res: int
-) -> pd.DataFrame:
-    """Shared kernel body: one (tile, year) obs group -> shoreline rows."""
-    from ..codecs import image as img_codec
-    from ..operators import composite as comp_op
-
+def _shoreline_rows_for_group(grp: pd.DataFrame) -> pd.DataFrame:
+    """Grouped-map kernel of plans.pipeline.shoreline_pipeline: one
+    (tile, year) group of tide-filtered observations -> shoreline rows.
+    Composite stats and marching squares run in one Python call, with no
+    float32-TIFF encode/decode between them; the rows equal
+    annual_composites() |> shorelines() (tests/test_pipeline.py)."""
     first = grp.iloc[0]
     stack = np.stack(
         [img_codec.decode_tile(bytes(b), f) for b, f in zip(grp["bytes"], grp["fmt"])]
     )
     med, std, cnt = comp_op._nan_median_std_count(stack)
-    rows = []
-    for piece in extract_shorelines_tile(
-        med, std, cnt, list(first["transform"]), int(first["halo_px"]),
-        level=level, min_vertices=min_vertices,
-    ):
-        cell = int(
-            cells.xy_to_cell(
-                np.array([piece.pop("_rep_x")]),
-                np.array([piece.pop("_rep_y")]),
-                cell_res,
-            )[0]
-        )
-        rows.append(
-            {
-                "cell_id": cell,
-                "tile_x": int(first["tile_x"]),
-                "tile_y": int(first["tile_y"]),
-                "year": int(first["year"]),
-                **piece,
-            }
-        )
+    pieces = extract_shorelines_tile(
+        med, std, cnt, list(first["transform"]), int(first["halo_px"])
+    )
     return pd.DataFrame(
-        rows,
-        columns=[
-            "cell_id", "tile_x", "tile_y", "year",
-            "geometry", "n_vertices", "length_m", "certainty",
-        ],
+        _piece_rows(pieces, DEFAULT_CELL_RES, **_tile_key(first)),
+        columns=SHORELINE_COLUMNS,
     )

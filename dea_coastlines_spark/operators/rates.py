@@ -384,21 +384,3 @@ def with_certainty(
         .otherwise("good"),
     ).drop("is_rocky")
 
-
-def dist_wide(signed: DataFrame) -> DataFrame:
-    """Long (point, year, dist) -> wide dist_YYYY columns (export only,
-    vector.py:822,846 wide form)."""
-    return (
-        signed.groupBy("point_id")
-        .pivot("year")
-        .agg(F.first("dist"))
-        .select(
-            "point_id",
-            *[
-                F.col(c).alias(f"dist_{c}")
-                for c in sorted(
-                    c for c in signed.select("year").distinct().toPandas()["year"].astype(str)
-                )
-            ],
-        )
-    )

@@ -35,10 +35,6 @@ def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     )
 
 
-def cosine_col(a_col: str, b_col: str, na_col: str, nb_col: str):
-    return _dot(F.col(a_col), F.col(b_col)) / (F.col(na_col) * F.col(nb_col))
-
-
 def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,

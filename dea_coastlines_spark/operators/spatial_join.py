@@ -35,7 +35,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 from pyspark.sql.window import Window
 
 from ..geometry import algorithms as ga
@@ -69,21 +68,6 @@ def _rebatched(batches, target_rows: int = _KERNEL_BATCH_ROWS):
             buf, n = [], 0
     if buf:
         yield pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-
-
-def cell_of_xy(res: int):
-    """Vectorized Arrow UDF: (x, y) -> cell_id (north_rule batch-encode).
-
-    Kept for parity testing and for callers that already sit inside a
-    Python stage; the JOIN paths below use the bit-identical Catalyst
-    expression `cell_id_expr` instead — cell assignment then runs in
-    whole-stage codegen with zero Python crossings."""
-
-    @F.pandas_udf(LongType())
-    def _enc(x: pd.Series, y: pd.Series) -> pd.Series:
-        return pd.Series(cells.xy_to_cell(x.to_numpy(), y.to_numpy(), res))
-
-    return _enc
 
 
 def explode_polygons_to_cells(

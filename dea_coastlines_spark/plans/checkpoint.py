@@ -88,7 +88,11 @@ class CheckpointedPipeline:
         (per-cell_key directories replaced, never appended), then the
         lineage row commits. A kill between the two re-runs that batch
         idempotently — the overwrite replaces the orphaned partitions
-        instead of duplicating rows."""
+        instead of duplicating rows.
+
+        fn must pass `key_cols` through unchanged: every output row's
+        key must be one of its batch's input keys, else ValueError
+        (raised before the batch writes anything)."""
         if batch_keys is not None and batch_keys < 1:
             raise ValueError(f"batch_keys must be >= 1, got {batch_keys}")
         key_expr = F.concat_ws("|", *[F.col(c).cast("string") for c in key_cols])
@@ -121,22 +125,36 @@ class CheckpointedPipeline:
                 "cell_key",
                 F.concat_ws("|", *[F.col(c).cast("string") for c in key_cols]),
             ).persist(StorageLevel.MEMORY_AND_DISK)
-            # persist: the write materializes the plan ONCE into cache;
-            # the lineage stats below read the same materialization the
-            # files came from instead of re-executing fn's whole plan
-            # per batch (and unlike a read-back of out_path, this also
-            # works when a key legitimately produces zero rows)
+            # persist: the lineage stats materialize the plan ONCE into
+            # cache and the write reads the same materialization instead
+            # of re-executing fn's whole plan per batch (and unlike a
+            # read-back of out_path, this also works when a key
+            # legitimately produces zero rows)
+            stats = (
+                out_k.groupBy("cell_key").agg(F.count("*").alias("n_rows")).collect()
+            )
+            produced = {r.cell_key: int(r.n_rows) for r in stats}
+            # Output keys come from fn's OUTPUT rows. A key that is not
+            # one of this batch's input keys (e.g. a column fn recomputes
+            # at another resolution) would record n_rows 0 for every
+            # input key and write partitions a later batch's dynamic
+            # overwrite can clobber — refuse before anything is written.
+            stray = sorted(set(produced) - set(group))
+            if stray:
+                out_k.unpersist()
+                raise ValueError(
+                    f"stage {stage!r}: output rows carry {key_cols} keys "
+                    f"that are not among the batch's input keys "
+                    f"(e.g. {stray[:3]}); key the stage by columns fn "
+                    f"passes through unchanged"
+                )
             (
                 out_k.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("cell_key")
                 .parquet(out_path)
             )
-            stats = (
-                out_k.groupBy("cell_key").agg(F.count("*").alias("n_rows")).collect()
-            )
             out_k.unpersist()
-            produced = {r.cell_key: int(r.n_rows) for r in stats}
             self._append_lineage(
                 [
                     {

@@ -3,14 +3,18 @@
 tiles (input_hint schema)
   -> caption parse (JVM from_json)
   -> tide-window row filter           (raster.py:330-337 semantics)
-  -> per-(tile, year) composite       (raster.py:379-384; one grouped map)
-  -> marching-squares vectorization   (vector.py:1450-1456; one mapInPandas)
+  -> per-(tile, year) composite       (raster.py:379-384)  } one grouped
+  -> marching-squares vectorization   (vector.py:1450-1456) } map
   -> shoreline rows (cell_id, year, WKB, certainty)
 
-Two Python stages total, everything between them is Catalyst-optimized
+One Python stage total; everything before it is Catalyst-optimized
 DataFrame ops. At 100 TB the plan shape is: parquet/Iceberg scan with
 (cell, year) partition pruning -> broadcast join of tide cutoffs ->
-shuffle on (tile_x, tile_y, year) -> grouped map -> narrow mapInPandas.
+shuffle on (tile_x, tile_y, year) -> grouped map.
+
+Plans that need the composite table itself (rates, masking, gapfill)
+run the staged pair annual_composites |> contours.shorelines instead;
+its rows equal shoreline_pipeline's.
 """
 
 from __future__ import annotations
@@ -23,17 +27,20 @@ from ..operators import masking as mask_op
 
 
 def shoreline_pipeline(
-    tiles: DataFrame,
-    apply_tide_filter: bool = True,
-    gapfill: bool = False,
-    min_vertices: int = 10,
+    tiles: DataFrame, apply_tide_filter: bool = True
 ) -> DataFrame:
-    comps = (
-        comp_op.gapfill_composites(tiles, apply_tide_filter)
-        if gapfill
-        else comp_op.annual_composites(tiles, apply_tide_filter)
+    """Tiles -> shoreline rows: caption parse, tide filter, then one
+    grouped map per (tile, year) that composites and vectorizes."""
+    meta = comp_op.with_caption(tiles)
+    if apply_tide_filter:
+        meta = comp_op.tide_filtered(meta)
+    return (
+        meta.select(
+            "tile_x", "tile_y", "year", "bytes", "fmt", "transform", "halo_px"
+        )
+        .groupBy("tile_x", "tile_y", "year")
+        .applyInPandas(cont_op._shoreline_rows_for_group, cont_op.SHORELINE_SCHEMA)
     )
-    return cont_op.shorelines(comps, min_vertices=min_vertices)
 
 
 def rates_pipeline(
@@ -201,85 +208,3 @@ def shorelines_in_aoi(
         .filter(F.col("frac_inside") >= min_frac)
         .drop("_sl_id")
     )
-
-
-def shorelines_in_aoi_fused(
-    shorelines: DataFrame,
-    aoi: DataFrame,
-    min_frac: float = 0.0,
-    aoi_id: str = "aoi_id",
-) -> DataFrame:
-    """Fused variant of shorelines_in_aoi for broadcast-size AOI tables:
-    the whole vertex-PIP-reaggregate chain runs inside ONE narrow Arrow
-    kernel over the shoreline rows — zero extra exchanges (no vertex
-    explode shuffle, no PIP candidate join, no re-agg, no join-back, no
-    upstream persist), the same fusion move shorelines_fused makes for
-    the composite stage. Output rows/values equal shorelines_in_aoi
-    (pytest parity); only the physical plan differs.
-
-    Scale: the AOI table is collected and broadcast (fits comfortably to
-    ~10^5 polygons); the cell-cover shorelines_in_aoi stays the path for
-    AOI tables beyond broadcast size. Per-shoreline work is bbox-pruned
-    vectorized ray-casting — O(verts x candidate AOIs)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F401  (schema build)
-
-    from ..geometry import algorithms as ga
-    from ..geometry import wkb as _wkb
-
-    aoi_pdf = aoi.select(aoi_id, "geometry").toPandas()
-    feats = []
-    for aid, g in zip(aoi_pdf[aoi_id], aoi_pdf["geometry"]):
-        gtype, payload = _wkb.parse(bytes(g))
-        if gtype != 3:
-            raise ValueError("shorelines_in_aoi_fused expects Polygon AOIs")
-        shell, holes = payload[0], payload[1:]
-        xs, ys = shell[:, 0], shell[:, 1]
-        feats.append((aid, shell, holes,
-                      (xs.min(), ys.min(), xs.max(), ys.max())))
-    bc = shorelines.sparkSession.sparkContext.broadcast(feats)
-
-    in_fields = shorelines.schema.fields
-    aoi_dt = aoi.schema[aoi_id].dataType.simpleString()
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in in_fields]
-        + [f"`{aoi_id}` {aoi_dt}", "n_inside long",
-           "n_vertices_total long", "frac_inside double"]
-    )
-    in_names = [f.name for f in in_fields]
-
-    def kernel(batches):
-        fts = bc.value
-        for pdf in batches:
-            out = []
-            for i in range(len(pdf)):
-                c = _wkb.coords_of(bytes(pdf["geometry"].iloc[i]))
-                n = len(c)
-                if n == 0:
-                    continue
-                px, py = c[:, 0], c[:, 1]
-                bx0, by0, bx1, by1 = px.min(), py.min(), px.max(), py.max()
-                for aid, shell, holes, (ax0, ay0, ax1, ay1) in fts:
-                    if bx1 < ax0 or ax1 < bx0 or by1 < ay0 or ay1 < by0:
-                        continue
-                    inside = ga.points_in_polygon(px, py, shell)
-                    for hole in holes:
-                        inside &= ~ga.points_in_polygon(
-                            px, py, hole, boundary_counts=False
-                        )
-                    n_in = int(inside.sum())
-                    frac = n_in / n
-                    if n_in > 0 and frac >= min_frac:
-                        row = {k: pdf[k].iloc[i] for k in in_names}
-                        row[aoi_id] = aid
-                        row["n_inside"] = n_in
-                        row["n_vertices_total"] = n
-                        row["frac_inside"] = frac
-                        out.append(row)
-            yield pd.DataFrame(
-                out, columns=in_names + [aoi_id, "n_inside",
-                                         "n_vertices_total", "frac_inside"]
-            )
-
-    return shorelines.mapInPandas(kernel, out_schema)

@@ -177,9 +177,8 @@ class SnapshotTable:
         stage_dir = f"{self.data_dir}/stage-{stage_id}"
         if partition_by and cluster:
             # cluster rows so each partition directory gets ONE file:
-            # avoids small-files explosion AND guarantees co-location of
-            # a partition key's rows (enables the shuffle-free grouped
-            # paths, e.g. contours.shorelines_colocated)
+            # avoids small-files explosion and keeps a partition key's
+            # rows together in one file
             df = df.repartition(*[F.col(c) for c in partition_by])
         writer = df.write.mode("overwrite")
         if partition_by:

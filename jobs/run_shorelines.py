@@ -15,9 +15,9 @@ Usage (local example; on a cluster swap --master for YARN/k8s):
         --synth 4,2,2000,2002,3 --tiles-table /tmp/tiles \
         --output /tmp/shorelines --checkpoint-dir /tmp/ckpt
 
-Re-running with the same --checkpoint-dir resumes: completed
-(cell_id, year) partitions are skipped via the lineage table
-(reference analog: run_completed markers, coastlines/raster.py:716-725).
+Re-running with the same --checkpoint-dir resumes: completed tiles
+(all of a tile's years) are skipped via the lineage table (reference
+analog: run_completed markers, coastlines/raster.py:716-725).
 """
 
 from __future__ import annotations
@@ -42,9 +42,9 @@ def parse_args(argv):
     p.add_argument("--output", required=True,
                    help="snapshot-table path for shoreline rows")
     p.add_argument("--checkpoint-dir", default=None,
-                   help="enable per-(cell, year) lineage + resume")
+                   help="enable per-tile lineage + resume")
     p.add_argument("--checkpoint-batch-cells", type=int, default=None,
-                   help="commit lineage every N cells so a killed job "
+                   help="commit lineage every N tiles so a killed job "
                         "resumes at the last completed batch")
     p.add_argument("--years", default=None,
                    help="lo:hi inclusive year range pushed down to the "
@@ -101,15 +101,17 @@ def main(argv=None) -> int:
     if args.checkpoint_dir:
         ckpt = CheckpointedPipeline(spark, args.checkpoint_dir)
         resumed_keys = ckpt.completed_keys("shorelines").count()
-        # Keyed by cell_id ONLY (not (cell, year)): the tide-cutoff
-        # window is a min/max over a tile's FULL time series
-        # (coastlines/raster.py:283-289), so a cell must recompute all
+        # Keyed by tile (not (tile, year)): the tide-cutoff window is a
+        # min/max over a tile's FULL time series
+        # (coastlines/raster.py:283-289), so a tile must recompute all
         # its years together or a partial resume would see a truncated
         # series and produce different cutoffs than the original run.
+        # Not by cell_id: a shoreline row's cell_id is the res-11 cell
+        # of its midpoint, not the res-10 tile cell of its input.
         out = ckpt.run_stage(
             "shorelines",
             tiles,
-            key_cols=["cell_id"],
+            key_cols=["tile_x", "tile_y"],
             fn=lambda todo: shoreline_pipeline(
                 todo, apply_tide_filter=not args.no_tide_filter
             ),

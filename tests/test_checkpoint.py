@@ -3,6 +3,7 @@ cells and produces identical output."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -165,3 +166,31 @@ def test_batched_commits_and_crash_window_idempotence(spark, base_dir):
                         batch_keys=1)
     assert calls == [1, 1, 1, 1]  # no new fn invocations
     assert out3.count() == out.count()
+
+
+def test_stage_output_keys_must_be_input_keys(spark, base_dir):
+    """Shoreline rows carry the res-11 cell of their midpoint, tiles the
+    res-10 cell of their corner: a stage keyed by cell_id must fail
+    before writing anything, instead of recording n_rows 0 for every
+    input key. Keyed by tile, every row is committed under its tile."""
+    from dea_coastlines_spark.plans.pipeline import shoreline_pipeline
+    from dea_coastlines_spark.sources.tiles import with_tile_meta
+
+    # two tile rows so the coast crosses a tile (tile 1|1 holds it)
+    spec = corpus.CorpusSpec(
+        tile_px=48, halo_px=4, tiles_x=2, tiles_y=2,
+        year0=2000, year1=2001, obs_per_year=3, cloud_frac=0.0, seed=13,
+    )
+    tiles = with_tile_meta(spark.createDataFrame(corpus.generate_pandas(spec)))
+    p = CheckpointedPipeline(spark, base_dir)
+    with pytest.raises(ValueError, match="not among the batch's input keys"):
+        p.run_stage("sl", tiles, ["cell_id"], shoreline_pipeline)
+    assert not os.path.exists(os.path.join(base_dir, "sl"))
+    assert p.completed_keys("sl").count() == 0
+
+    out = p.run_stage("sl", tiles, ["tile_x", "tile_y"], shoreline_pipeline)
+    n_out = out.count()
+    assert n_out > 0
+    m = p.metrics().toPandas()
+    assert set(m.cell_key) == {"0|0", "0|1", "1|0", "1|1"}
+    assert m.n_rows.sum() == n_out

@@ -173,55 +173,22 @@ def test_parallelism_invariance_exact_match(spark, tiles_df):
 
 
 def test_fused_equals_staged(spark, tiles_df):
-    """shorelines_fused (one grouped stage, no TIFF round trip) must be
-    byte-identical to annual_composites |> shorelines."""
-    from dea_coastlines_spark.operators.contours import shorelines_fused
+    """shoreline_pipeline (one grouped stage, no TIFF round trip) must be
+    byte-identical to the staged pair annual_composites |> shorelines."""
+    from dea_coastlines_spark.operators.contours import shorelines
 
-    staged = shoreline_pipeline(tiles_df, apply_tide_filter=True)
-    fused = shorelines_fused(tiles_df, apply_tide_filter=True)
+    fused = shoreline_pipeline(tiles_df, apply_tide_filter=True)
+    staged = shorelines(comp_op.annual_composites(tiles_df, apply_tide_filter=True))
 
     def key(rows):
         return sorted(
             (r.cell_id, r.tile_x, r.tile_y, r.year, bytes(r.geometry).hex(),
-             r.n_vertices, round(r.length_m, 9), r.certainty)
+             r.n_vertices, r.length_m, r.certainty)
             for r in rows
         )
 
-    assert key(fused.collect()) == key(staged.collect())
-
-
-def test_colocated_equals_staged(spark, tiles_df, tmp_path):
-    """shorelines_colocated (zero shuffle of image bytes) must equal the
-    staged pipeline on a write_tiles table, and its plan must contain
-    no Exchange on the image-bytes branch."""
-    import contextlib
-    import io
-    import re
-
-    from dea_coastlines_spark.operators.contours import shorelines_colocated
-    from dea_coastlines_spark.sources import write_tiles
-
-    path = str(tmp_path / "tiles")
-    write_tiles(tiles_df, path)
-    col = shorelines_colocated(spark, path, apply_tide_filter=True)
-    staged = shoreline_pipeline(tiles_df, apply_tide_filter=True)
-
-    def key(rows):
-        return sorted(
-            (r.tile_x, r.tile_y, r.year, bytes(r.geometry).hex(), r.certainty)
-            for r in rows
-        )
-
-    assert key(col.collect()) == key(staged.collect())
-
-    # plan: the only Exchange feeds the tiny tide-cutoff aggregate; the
-    # bytes branch (scan -> broadcast join -> MapInPandas) has none.
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        shorelines_colocated(spark, path, apply_tide_filter=False).explain("formatted")
-    plan = buf.getvalue()
-    assert "FlatMapGroupsInPandas" not in plan  # grouped WITHIN partitions
-    assert len(re.findall(r"\) Exchange", plan)) == 0
+    staged_rows = key(staged.collect())
+    assert staged_rows and key(fused.collect()) == staged_rows
 
 
 def test_shorelines_in_aoi_matches_bruteforce(spark, tiles_df):
@@ -324,68 +291,3 @@ def test_multi_level_shorelines(spark, tiles_df):
     assert by_level[-0.2].isdisjoint(by_level[0.0])
     assert by_level[0.2].isdisjoint(by_level[0.0])
 
-
-def test_shorelines_in_aoi_fused_parity_and_plan(spark, tiles_df):
-    """shorelines_in_aoi_fused == shorelines_in_aoi row-for-row, and its
-    physical plan has ZERO exchanges past the shoreline stage (the PIP
-    chain is fused into one narrow kernel)."""
-    import contextlib
-    import io
-    import re
-
-    import pandas as pd
-
-    from dea_coastlines_spark.plans.pipeline import (
-        shorelines_in_aoi,
-        shorelines_in_aoi_fused,
-    )
-
-    sl_df = shoreline_pipeline(tiles_df, apply_tide_filter=True)
-    rects = {
-        "cover": (-10.0, -2000.0, 9000.0, 2000.0),
-        "west_half": (-10.0, -2000.0, 4000.0, 2000.0),
-        "east_q": (6500.0, -2000.0, 9000.0, 2000.0),
-    }
-    aoi = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "aoi_id": list(rects),
-                "geometry": [
-                    wkb.polygon(np.array(
-                        [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
-                    ))
-                    for x0, y0, x1, y1 in rects.values()
-                ],
-            }
-        )
-    )
-
-    def key(rows):
-        return sorted(
-            (r.tile_x, r.tile_y, r.year, r.aoi_id, r.n_inside,
-             r.n_vertices_total, round(r.frac_inside, 9),
-             bytes(r.geometry).hex())
-            for r in rows
-        )
-
-    cols = ["tile_x", "tile_y", "year", "aoi_id", "n_inside",
-            "n_vertices_total", "frac_inside", "geometry"]
-    a = shorelines_in_aoi(sl_df, aoi, min_frac=0.0).select(*cols).collect()
-    b = shorelines_in_aoi_fused(sl_df, aoi, min_frac=0.0).select(*cols).collect()
-    assert key(a) == key(b)
-    assert len(b) > 0
-
-    # min_frac filter parity
-    a1 = shorelines_in_aoi(sl_df, aoi, min_frac=0.999).select(*cols).collect()
-    b1 = shorelines_in_aoi_fused(sl_df, aoi, min_frac=0.999).select(*cols).collect()
-    assert key(a1) == key(b1)
-
-    # plan: fused adds no Exchange beyond the upstream shoreline stage
-    buf_up, buf_fused = io.StringIO(), io.StringIO()
-    with contextlib.redirect_stdout(buf_up):
-        sl_df.explain("formatted")
-    with contextlib.redirect_stdout(buf_fused):
-        shorelines_in_aoi_fused(sl_df, aoi).explain("formatted")
-    n_up = len(re.findall(r"\) Exchange", buf_up.getvalue()))
-    n_fused = len(re.findall(r"\) Exchange", buf_fused.getvalue()))
-    assert n_fused == n_up

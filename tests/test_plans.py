@@ -62,8 +62,9 @@ def test_flagship_parquet_plan_shape(spark, tmp_path):
     # the cutoff subtree scans ONLY the caption column
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", p)
     assert any(s.strip() == "caption:string" for s in schemas), schemas
-    # image bytes cross into Python exactly twice (composite + contours)
-    assert len(re.findall(r"\(\d+\) (?:FlatMapGroupsInPandas|MapInPandas)", p)) == 2
+    # image bytes cross into Python exactly once (composite + contours in
+    # one grouped map)
+    assert len(re.findall(r"\(\d+\) (?:FlatMapGroupsInPandas|MapInPandas)", p)) == 1
 
 
 def test_knn_k1_plan_has_single_aggregate_no_window(spark):
