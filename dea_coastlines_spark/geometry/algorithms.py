@@ -153,6 +153,9 @@ def clip_polyline_to_bbox(line: np.ndarray, xmin, ymin, xmax, ymax) -> list[np.n
     line = np.asarray(line, np.float64)
     pieces: list[list[np.ndarray]] = []
     cur: list[np.ndarray] = []
+    # a clipped segment continues the current piece iff the previous
+    # segment kept its end vertex and this one keeps its start vertex
+    kept_end = False
 
     def emit():
         nonlocal cur
@@ -164,19 +167,22 @@ def clip_polyline_to_bbox(line: np.ndarray, xmin, ymin, xmax, ymax) -> list[np.n
         seg = _clip_segment(line[i], line[i + 1], xmin, ymin, xmax, ymax)
         if seg is None:
             emit()
+            kept_end = False
             continue
-        a, b = seg
-        if cur and np.allclose(cur[-1], a, atol=1e-12):
+        a, b, t0, t1 = seg
+        if kept_end and t0 == 0.0:
             cur.append(b)
         else:
             emit()
             cur = [a, b]
+        kept_end = t1 == 1.0
     emit()
     return [np.array(p) for p in pieces]
 
 
 def _clip_segment(a, b, xmin, ymin, xmax, ymax):
-    """Liang–Barsky segment-vs-box clip; None if fully outside."""
+    """Liang–Barsky segment-vs-box clip: the clipped end points and their
+    parameters (t0, t1) along a->b; None if fully outside."""
     x0, y0 = a
     x1, y1 = b
     dx, dy = x1 - x0, y1 - y0
@@ -205,6 +211,8 @@ def _clip_segment(a, b, xmin, ymin, xmax, ymax):
     return (
         np.array([x0 + t0 * dx, y0 + t0 * dy]),
         np.array([x0 + t1 * dx, y0 + t1 * dy]),
+        t0,
+        t1,
     )
 
 

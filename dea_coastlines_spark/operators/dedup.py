@@ -780,7 +780,12 @@ def _dedup_set_jaccard(
     set itself; it pays for itself whenever rows-per-distinct-set > 1
     (templated/boilerplate corpora), and the grouped id lists are
     bounded by group size, not corpus size. Callers with near-unique
-    sets (word n-grams over real text) keep the direct path."""
+    sets (word n-grams over real text) keep the direct path.
+
+    `threshold` must be > 0: at <= 0 the direct path also emits the
+    J=0.0 pairs of empty sets, which the collapse does not expand."""
+    if threshold <= 0:
+        raise ValueError(f"threshold must be > 0, got {threshold}")
     canon = base.select(
         id_col, "grp", F.array_sort(F.col(set_col)).alias(set_col)
     )

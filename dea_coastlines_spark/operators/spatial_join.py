@@ -45,7 +45,7 @@ from ..index.cells_expr import cell_id_expr
 DEFAULT_RES = 14  # 512 m cells
 
 # Session Arrow batches are byte-bounded (32 MB) to protect fat image
-# rows, record-bounded at 10k otherwise; upstream operators can still
+# rows, record-bounded at 65,536 otherwise; upstream operators can still
 # hand kernels smaller batches than ideal. Kernels below re-batch their
 # input iterator to this many rows before computing — an operator-local
 # floor on the vectorization width, independent of session batching.

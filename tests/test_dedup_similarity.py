@@ -742,3 +742,11 @@ def test_charset_jaccard_distinct_set_collapse_parity(spark, docs_df):
             for r in dedup._pairwise_set_jaccard(base, "doc_id", "chars", t).collect()
         }
         assert fast == direct and len(fast) > 0
+
+
+@pytest.mark.parametrize("threshold", [0.0, -0.5])
+def test_dedup_set_jaccard_rejects_nonpositive_threshold(threshold):
+    """At threshold <= 0 the distinct-set collapse would silently drop
+    the J=0.0 empty-set pairs the direct path emits; it refuses instead."""
+    with pytest.raises(ValueError, match="threshold must be > 0"):
+        dedup._dedup_set_jaccard(None, "doc_id", "chars", threshold)

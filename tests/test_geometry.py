@@ -85,6 +85,20 @@ def test_clip_polyline_to_bbox():
     assert ga.clip_polyline_to_bbox(np.array([[20, 20], [30, 30]], float), 0, 0, 10, 10) == []
 
 
+def test_clip_polyline_splits_at_reentry_far_from_origin():
+    """A line that leaves the box and re-enters 24 m further along is two
+    pieces, at projected-CRS magnitudes (x ~ 4e6 m) as at the origin."""
+    for x0 in (0.0, 4e6):
+        line = np.array(
+            [[100, 900], [495, 1005], [505, 995], [600, 900]], float
+        ) + [x0, 0.0]
+        pieces = ga.clip_polyline_to_bbox(line, x0, 0, x0 + 1000, 1000)
+        assert len(pieces) == 2, x0
+        assert np.allclose(pieces[0][-1], [x0 + 476.190476, 1000.0])
+        assert np.allclose(pieces[1][0], [x0 + 500.0, 1000.0])
+        assert np.array_equal(pieces[1][-1], line[-1])
+
+
 def test_disc_polygon_radius():
     ring = ga.disc_polygon(100.0, -50.0, 30.0, n=128)
     r = np.hypot(ring[:, 0] - 100.0, ring[:, 1] + 50.0)

@@ -6,10 +6,11 @@ semantics: a batch closes when EITHER cap hits):
   * maxBytesPerBatch bounds UDF-input batches by BYTES, so fat image
     rows (~100 KB encoded tile each) can never form multi-GB batches —
     the executor-OOM guard at cluster scale;
-  * maxRecordsPerBatch stays at the 10k default so thin tabular rows
-    and toPandas transfers (which the byte cap does NOT govern) are not
-    throttled — an earlier global 256-record cap made a 1.9 M-row
-    collect 100x slower than the query that produced it.
+  * maxRecordsPerBatch is 65,536 (get_spark; spark-submit jobs keep
+    Spark's 10k default), so thin tabular rows and toPandas transfers
+    (which the byte cap does NOT govern) are not throttled — an earlier
+    global 256-record cap made a 1.9 M-row collect 100x slower than the
+    query that produced it.
 
 These tests pin the contract behaviorally (actual batch sizes seen by
 a mapInPandas kernel), not just the conf strings, for both session
@@ -36,8 +37,8 @@ def _batch_sizes(spark, df):
 
 def test_fat_rows_are_byte_bounded(spark):
     """Rows carrying ~100 KB payloads must batch by bytes: every batch
-    but a partition's last stays under maxBytesPerBatch and none gets
-    anywhere near the 10k record cap."""
+    but a partition's last stays under maxBytesPerBatch and none reaches
+    even Spark's 10k default record cap (the session's is 65,536)."""
     max_bytes = int(spark.conf.get("spark.sql.execution.arrow.maxBytesPerBatch"))
     row_bytes = 100_000
     n_rows = 2_000
@@ -89,3 +90,45 @@ def test_submit_session_applies_defaults_and_yields_to_existing(spark):
     assert 0 < int(
         _SUBMIT_DEFAULTS["spark.sql.execution.arrow.maxBytesPerBatch"]
     ) <= 256 * 1024 * 1024
+
+
+def test_workers_run_engine_daemon_and_import_late_py_files(spark, tmp_path):
+    """Python workers start from the engine's daemon, and a `.py` and a
+    `.zip` shipped with addPyFile after the workers are warm still
+    import inside a kernel: the daemon's zip importers skip only
+    re-reads of unchanged archives."""
+    import zipfile
+
+    sc = spark.sparkContext
+    assert (
+        sc.getConf().get("spark.python.daemon.module")
+        == "dea_coastlines_spark.pydaemon"
+    )
+
+    def patched_by(batches):
+        import zipimport
+
+        code = zipimport.zipimporter.invalidate_caches.__code__
+        for _ in batches:
+            yield pd.DataFrame({"f": [code.co_filename]})
+
+    one = spark.range(1, numPartitions=1)
+    warm = one.mapInPandas(patched_by, "f string").collect()
+    assert warm[0].f.endswith("pydaemon.py")
+
+    py = tmp_path / "dcs_late_py.py"
+    py.write_text("VALUE = 11\n")
+    zpath = tmp_path / "dcs_late_zip.zip"
+    with zipfile.ZipFile(zpath, "w") as zf:
+        zf.writestr("dcs_late_zip/__init__.py", "VALUE = 31\n")
+    sc.addPyFile(str(py))
+    sc.addPyFile(str(zpath))
+
+    def late_imports(batches):
+        import dcs_late_py
+        import dcs_late_zip
+
+        for _ in batches:
+            yield pd.DataFrame({"v": [dcs_late_py.VALUE + dcs_late_zip.VALUE]})
+
+    assert one.mapInPandas(late_imports, "v long").collect()[0].v == 42
